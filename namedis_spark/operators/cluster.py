@@ -180,18 +180,11 @@ def connected_components(
             e = store.read_round(name, latest)
             start_round = latest + 1
             resumed = True
-    import os
-    import sys
-    import time
-
-    profile = bool(os.environ.get("SPARK_GRAFT_PROFILE"))
-
     if not resumed:
         # local contraction absorbs the initial distinct (union-find dedups
         # implicitly) and hands the rounds a near-star graph; eager
         # checkpoint: the star round references its input several times and
         # must not re-run the Python contraction per reference
-        t0 = time.time()
         # two passes: the first collapses each hash partition's subgraph to
         # local stars; the second re-co-locates by src, so a node that
         # appeared in several partitions (and so carries edges to several
@@ -200,8 +193,6 @@ def connected_components(
         # fixpoint — typically two rounds (apply + verify) regardless of the
         # original diameter.
         e = _contract_local(_contract_local(e)).localCheckpoint(eager=True)
-        if profile:
-            print(f"# cc.contract: {time.time() - t0:.2f}s", file=sys.stderr)
 
     def _stats(df: DataFrame) -> tuple[int, int]:
         row = df.agg(
@@ -216,7 +207,6 @@ def connected_components(
     # ~2^-64; the edge sets are already distinct)
     prev = None
     for k in range(start_round, max_rounds):
-        t0 = time.time()
         new_e = _small_star(_large_star(e))
         if store is not None:
             # non-blocking: the round is materialized (and its convergence
@@ -235,11 +225,6 @@ def connected_components(
             new_e = new_e.localCheckpoint(eager=True)
             cur = _stats(new_e)
         e = new_e
-        if profile:
-            print(
-                f"# cc.round{k}: {time.time() - t0:.2f}s n={cur[0]}",
-                file=sys.stderr,
-            )
         if cur == prev:
             break
         near_stable = prev is None or abs(prev[0] - cur[0]) <= max(
@@ -257,8 +242,6 @@ def connected_components(
             # edge count is still genuinely shrinking — one fewer serial
             # aggregation job per such round, and the probe almost never
             # fires there.
-            if profile:
-                print(f"# cc.star_fixpoint after round {k}", file=sys.stderr)
             break
         prev = cur
 

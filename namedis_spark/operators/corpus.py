@@ -10,12 +10,16 @@ These produce the broadcast inputs of the scoring stage:
 All pure DataFrame aggregation / joins — map-side combinable groupBys, no
 Python rows. At 100 TB these are the one-time EP2 "statistics pipeline"
 jobs; their outputs are small (≤ millions of rows) and broadcast.
+``side_tables`` runs the jobs the pipeline needs and assembles the
+scorers' ``SideTables``.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from namedis_spark.operators.scoring import ScoringParams, SideTables
 
 # exterm.pl constants
 IAF_LEAST_VALUE = 0.5  # exterm.pl:17
@@ -619,56 +623,6 @@ IC_OFFSET = 3.5  # setICOffset (clust.pl:277)
 LCS_MAX_DEPTH_SUM = 3  # leastCommonSubsumer depth gate (ConceptNet.pm:5630-5655)
 
 
-def term_closeness(features: DataFrame, category_expr=None) -> DataFrame:
-    """Concept/LCS closeness (calcTermCloseness, ConceptNet.pm:5630-5655;
-    leastCommonSubsumer, ConceptNet.pm:3283-3361): for term pairs whose
-    least common subsumer lies within combined depth ≤ 3, closeness =
-    IC(lcs) − ICOffset.
-
-    Under the synthetic 3-level taxonomy (term → cat → supercat → root,
-    build_taxonomy) the depth gate admits exactly the same-category pairs
-    (depth-sum 2); same-supercat pairs sit at depth-sum 4 and are gated
-    out, mirroring how the reference rejects distant subsumers. Returns
-    (term1, term2, lcs, closeness) for distinct co-categorized terms.
-
-    ``category_expr`` overrides the term→category edge function (default:
-    the pipeline's synthetic termNNNN taxonomy); callers running over a
-    different vocabulary supply their own deterministic mapping."""
-    tf = (
-        features.select(F.explode("term_freq").alias("term", "freq"))
-        .groupBy("term")
-        .agg(F.sum("freq").alias("freq"))
-    )
-    cat_fn = category_expr if category_expr is not None else term_category
-    cat = tf.withColumn("cat", cat_fn(F.col("term"))).where(
-        F.col("cat").isNotNull()
-    )
-    cat_freq = (
-        cat.groupBy("cat")
-        .agg((F.sum("freq") * TAXO_ATTENUATION).alias("freq"))
-        .withColumnRenamed("cat", "term")
-    )
-    mc = (
-        tf.select(F.max("freq").alias("m"))
-        .unionByName(cat_freq.select(F.max("freq").alias("m")))
-        .agg(F.max("m"))
-        .collect()[0][0]
-    )
-    cat_ic = cat_freq.select(
-        F.col("term").alias("lcs"),
-        F.round(F.log(F.lit(float(mc))) - F.log("freq"), 6).alias("ic"),
-    )
-    a = cat.select(F.col("term").alias("term1"), F.col("cat").alias("lcs"))
-    b = cat.select(F.col("term").alias("term2"), F.col("cat").alias("lcs"))
-    pairs = a.join(b, "lcs").where(F.col("term1") < F.col("term2"))
-    return pairs.join(F.broadcast(cat_ic), "lcs").select(
-        "term1",
-        "term2",
-        "lcs",
-        F.round(F.col("ic") - F.lit(IC_OFFSET), 6).alias("closeness"),
-    )
-
-
 def prune_evidence_tables(
     amb_pdf,
     cn_pdf,
@@ -947,3 +901,101 @@ def name_part_logprobs(features: DataFrame):
     sur_lp = {k: _math.log(v / s_tot) for k, v in sur_cnt.items()}
     giv_lp = {k: _math.log(v / g_tot) for k, v in giv_cnt.items()}
     return sur_lp, giv_lp
+
+
+def side_tables(
+    features: DataFrame,
+    n_convs: int,
+    sizes: DataFrame,
+    params: ScoringParams,
+    ambiguity_rounds: int = 3,
+) -> SideTables:
+    """Build the scorers' ``SideTables`` from the features (EP2 analog).
+
+    ``sizes`` is (block_key, n) per block; its keys are the focus names the
+    evidence-table prune keeps. ``params`` supplies the prune's
+    ``error_tolerance``. The side-table jobs are independent; Spark
+    schedules concurrent jobs from separate driver threads, so their
+    (small-data) latencies overlap instead of adding up. Helpers are called
+    through this module's globals, so rebinding ``corpus.<helper>`` (tracing,
+    tests) reaches them."""
+    import math
+    from concurrent.futures import ThreadPoolExecutor
+
+    # (author, conv) participation pairs feed the ambiguity name table
+    hits = conv_author_hits(features).persist()
+    # the coauthor aggregation (corpus-sized pair explode) is the heaviest
+    # input of the prune step; materialize it CONCURRENTLY with the
+    # ambiguity fixed-point loop so it is cache-warm when the prune's
+    # significance filter needs it (it otherwise computes serially after
+    # the loop — a measured chunk of the Amdahl floor)
+    cn = coauthor_stats(features).persist()
+
+    with ThreadPoolExecutor(max_workers=6) as ex:
+        f_cn = ex.submit(cn.count)
+        # Ambiguity fixed point: when the distinct-name universe fits the
+        # documented driver bound (the common case — it is the same bound
+        # the broadcast dicts rely on), ONE bounded pull + sub-ms numpy
+        # iteration replaces ~4 barrier-latency Spark jobs per round; the
+        # significance prune then also runs driver-side on the names-sized
+        # tables (cn's OUTPUT is one row per name — only computing it is
+        # corpus-sized). Past the bound, the fully-distributed loop + prune
+        # run instead and the driver receives only the pruned dicts.
+        f_amb = ex.submit(
+            lambda: key_ambiguity_pdf_bounded(
+                features, rounds=ambiguity_rounds, hits=hits
+            )
+        )
+        # idf/IC + name-part tables derive from ONE unioned explode+groupBy
+        # job (both collects are vocab-/surface-sized; sharing the job
+        # removes a scheduling barrier from the serial floor)
+        f_terms = ex.submit(lambda: term_and_name_stats(features))
+        f_ts = ex.submit(lambda: tool_simi(features).collect())
+
+        amb_pdf = f_amb.result()
+        if amb_pdf is not None:
+            # submitted only on the bounded branch: the distributed
+            # fallback takes block keys as a DataFrame, so collecting
+            # O(distinct block keys) Row objects to the driver in the
+            # over-bound regime was pure waste (the exact regime the
+            # 10M-name guard exists for)
+            f_focus = ex.submit(lambda: sizes.select("block_key").collect())
+
+            def _prune_local():
+                f_cn.result()  # cn cache is warm; toPandas reads it
+                focus = {r["block_key"] for r in f_focus.result()}
+                return prune_evidence_tables(
+                    amb_pdf, cn.toPandas(), focus, params.error_tolerance
+                )
+
+            f_side = ex.submit(_prune_local)
+        else:
+            f_side = ex.submit(
+                lambda: prune_evidence_tables_df(
+                    key_ambiguity(features, rounds=ambiguity_rounds, hits=hits),
+                    cn,
+                    sizes.select("block_key"),
+                    params.error_tolerance,
+                )
+            )
+        pruned, (term_rows, name_part_lps), ts_rows = (
+            f_side.result(), f_terms.result(), f_ts.result(),
+        )
+        f_cn.result()
+    hits.unpersist()
+    cn.unpersist()
+
+    side = SideTables()
+    side.ambig, side.cn_counts, side.ambig_sum_total = pruned
+    side.idf, side.cat_ic = idf_ic_from_stats(term_rows, int(n_convs))
+    side.n_docs = float(n_convs)
+    if side.idf:
+        side.max_df = side.n_docs * math.exp(-min(side.idf.values()))
+    tool_map: dict[str, list[tuple[str, float]]] = {}
+    for r in ts_rows:
+        tool_map.setdefault(r["tool1"], []).append((r["tool2"], float(r["linreg_simi"])))
+    for v in tool_map.values():
+        v.sort(key=lambda kv: (-kv[1], kv[0]))
+    side.tool_simi_map = tool_map
+    side.surname_lp, side.given_lp = name_part_lps
+    return side

@@ -396,7 +396,7 @@ def lsh_topk(
 
 
 def hyperplane_buckets(
-    embeddings: DataFrame, n_planes: int = 8, seed: int = 7, dim: int | None = None
+    embeddings: DataFrame, n_planes: int = 8, seed: int = 7
 ) -> DataFrame:
     """Single-table hyperplane signature (tbl = 0 of the multi-table
     scheme) — kept for callers that bucket without OR-amplification.

@@ -10,6 +10,7 @@ the last complete stage/round, mirroring EP1's staged outputs
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -17,12 +18,12 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from namedis_spark.operators import corpus
-from namedis_spark.operators.blocking import evidence_pairs
+from namedis_spark.operators.blocking import PAIR_KEY_COLS, evidence_pairs
 from namedis_spark.operators.cluster import assignments_from_edges
 from namedis_spark.operators.evaluate import macro_micro, pairwise_prf
 from namedis_spark.operators.features import conversation_features
 from namedis_spark.operators.scoring import (
-    SCORE_SCHEMA,
+    EMIT_FLOOR_FRAC,
     ScoringParams,
     edges_above_threshold,
     prepare_scoring,
@@ -50,19 +51,6 @@ def run(
     ambiguity_rounds: int = 3,
     seeds: DataFrame | None = None,
 ) -> PipelineResult:
-    import os
-    import sys
-    import time
-
-    profile = bool(os.environ.get("SPARK_GRAFT_PROFILE"))
-    _t = time.time()
-
-    def tick(stage: str) -> None:
-        nonlocal _t
-        if profile:
-            print(f"# pipeline.{stage}: {time.time() - _t:.1f}s", file=sys.stderr)
-        _t = time.time()
-
     params = params or ScoringParams()
     store = CheckpointStore(spark, checkpoint_dir)
 
@@ -86,15 +74,9 @@ def run(
         )
 
     # -- corpus side tables (EP2 analog) ----------------------------------
-    # The five side-table jobs are independent; Spark schedules concurrent
-    # jobs from separate driver threads, so their (small-data) latencies
-    # overlap instead of adding up.
     # (features is already materialized + cached by the eager localCheckpoint
     # inside write_round — a persist().count() here would store and scan a
     # second copy.)
-    tick("features")
-    from concurrent.futures import ThreadPoolExecutor
-
     # Candidate pairs are only *materialized* for big blocks (evidence
     # joins); small blocks are scored pair-table-free by
     # score_blocks_exhaustive below. Evidence-pair generation depends only
@@ -110,111 +92,11 @@ def run(
         pairs = evidence_pairs(
             big_feats, max_evidence_df=params.max_evidence_df
         ).persist()
-
-    # (author, conv) participation pairs feed the ambiguity name table
-    hits = corpus.conv_author_hits(features).persist()
-
-    def timed(tag, fn):
-        if not profile:
-            return fn
-        def wrapped():
-            t0 = time.time()
-            out = fn()
-            print(f"# side.{tag}: {time.time() - t0:.2f}s", file=sys.stderr)
-            return out
-        return wrapped
-
-    # the coauthor aggregation (corpus-sized pair explode) is the heaviest
-    # input of the prune step; materialize it CONCURRENTLY with the
-    # ambiguity fixed-point loop so it is cache-warm when the prune's
-    # significance filter needs it (it otherwise computes serially after
-    # the loop — a measured chunk of the Amdahl floor)
-    cn = corpus.coauthor_stats(features).persist()
-
-    with ThreadPoolExecutor(max_workers=6) as ex:
-        f_cn = ex.submit(timed("coauthor_stats", lambda: cn.count()))
-        f_pairs = ex.submit(timed("pairs", lambda: pairs.count() if pairs is not None else 0))
-        # Ambiguity fixed point: when the distinct-name universe fits the
-        # documented driver bound (the common case — it is the same bound
-        # the broadcast dicts rely on), ONE bounded pull + sub-ms numpy
-        # iteration replaces ~4 barrier-latency Spark jobs per round; the
-        # significance prune then also runs driver-side on the names-sized
-        # tables (cn's OUTPUT is one row per name — only computing it is
-        # corpus-sized). Past the bound, the fully-distributed loop + prune
-        # run instead and the driver receives only the pruned dicts.
-        f_amb = ex.submit(
-            timed(
-                "ambiguity_fixed_point",
-                lambda: corpus.key_ambiguity_pdf_bounded(
-                    features, rounds=ambiguity_rounds, hits=hits
-                ),
-            )
-        )
-        # idf/IC + name-part tables derive from ONE unioned explode+groupBy
-        # job (both collects are vocab-/surface-sized; sharing the job
-        # removes a scheduling barrier from the serial floor)
-        f_terms = ex.submit(
-            timed("term_name_stats", lambda: corpus.term_and_name_stats(features))
-        )
-        f_ts = ex.submit(timed("tool_simi", lambda: corpus.tool_simi(features).collect()))
-
-        amb_pdf = f_amb.result()
-        if amb_pdf is not None:
-            # submitted only on the bounded branch: the distributed
-            # fallback takes block keys as a DataFrame, so collecting
-            # O(distinct block keys) Row objects to the driver in the
-            # over-bound regime was pure waste (the exact regime the
-            # 10M-name guard exists for)
-            f_focus = ex.submit(lambda: sizes.select("block_key").collect())
-
-            def _prune_local():
-                f_cn.result()  # cn cache is warm; toPandas reads it
-                focus = {r["block_key"] for r in f_focus.result()}
-                return corpus.prune_evidence_tables(
-                    amb_pdf, cn.toPandas(), focus, params.error_tolerance
-                )
-
-            f_side = ex.submit(timed("prune_local", _prune_local))
-        else:
-            f_side = ex.submit(
-                timed(
-                    "ambiguity_prune",
-                    lambda: corpus.prune_evidence_tables_df(
-                        corpus.key_ambiguity(
-                            features, rounds=ambiguity_rounds, hits=hits
-                        ),
-                        cn,
-                        sizes.select("block_key"),
-                        params.error_tolerance,
-                    ),
-                )
-            )
-        pruned, (term_rows, name_part_lps), ts_rows = (
-            f_side.result(), f_terms.result(), f_ts.result(),
-        )
-        f_pairs.result()
-        f_cn.result()
-    hits.unpersist()
-    cn.unpersist()
-
-    from namedis_spark.operators.scoring import SideTables
-
-    side = SideTables()
-    side.ambig, side.cn_counts, side.ambig_sum_total = pruned
-    side.idf, side.cat_ic = corpus.idf_ic_from_stats(term_rows, int(n_convs))
-    side.n_docs = float(n_convs)
-    if side.idf:
-        import math as _math
-
-        side.max_df = side.n_docs * _math.exp(-min(side.idf.values()))
-    tool_map: dict[str, list[tuple[str, float]]] = {}
-    for r in ts_rows:
-        tool_map.setdefault(r["tool1"], []).append((r["tool2"], float(r["linreg_simi"])))
-    for v in tool_map.values():
-        v.sort(key=lambda kv: (-kv[1], kv[0]))
-    side.tool_simi_map = tool_map
-    side.surname_lp, side.given_lp = name_part_lps
-    tick("side_tables")
+    with ThreadPoolExecutor(max_workers=1) as ex:
+        f_pairs = ex.submit(pairs.count) if pairs is not None else None
+        side = corpus.side_tables(features, n_convs, sizes, params, ambiguity_rounds)
+        if f_pairs is not None:
+            f_pairs.result()
 
     # -- blocking + scoring (stage snapshot) ------------------------------
     # Two disjoint paths by block size (see score_blocks_exhaustive /
@@ -224,34 +106,24 @@ def run(
         scored = store.read_round("scored", store.latest_round("scored"))
     else:
         prep = prepare_scoring(spark, features, side)
-        key_cols = ["block_key", "conv_id1", "conv_id2"]
         # The clustering path reads ONLY (stage1_mergeable, score) — the 12
         # diagnostic component columns are ~4/5 of the row and are only read
         # by verification queries, which invoke the scorers directly. Keep
         # them off the scored-pair checkpoint (union + localCheckpoint +
-        # parquet snapshot) unless explicitly requested: at 10^12 turns the
-        # scored-pair table is the pipeline's biggest materialized
-        # intermediate.
-        if os.environ.get("SPARK_GRAFT_SCORE_COMPONENTS"):
-            score_cols = [f.name for f in SCORE_SCHEMA.fields]
-        else:
-            score_cols = ["stage1_mergeable", "score"]
+        # parquet snapshot): at 10^12 turns the scored-pair table is the
+        # pipeline's biggest materialized intermediate.
+        score_cols = ["stage1_mergeable", "score"]
         small_scored = score_blocks_exhaustive(
-            spark,
-            prep,
-            side,
-            params,
-            small_block_size=params.small_block_size,
-            sizes=sizes,
+            spark, prep, side, params, sizes=sizes
         )
         big_prep = prep.join(F.broadcast(big_keys), "block_key")
         big_scored = score_pairs_grouped(spark, pairs, big_prep, side, params)
-        emit_floor = 0.8 * params.threshold
+        emit_floor = EMIT_FLOOR_FRAC * params.threshold
         big_scored = big_scored.where(
             F.col("stage1_mergeable") | (F.col("score") >= emit_floor)
         )
-        scored = small_scored.select(*key_cols, *score_cols).unionByName(
-            big_scored.select(*key_cols, *score_cols)
+        scored = small_scored.select(*PAIR_KEY_COLS, *score_cols).unionByName(
+            big_scored.select(*PAIR_KEY_COLS, *score_cols)
         )
         scored = store.write_round(
             "scored", 0, scored, lineage={"op": "blocking+scoring"}, blocking=False
@@ -262,7 +134,6 @@ def run(
     sizes.unpersist()
     if pairs is not None:
         pairs.unpersist()
-    tick("blocking_scoring")
 
     # -- clustering (per-round snapshots inside) --------------------------
     if seeds is not None:
@@ -316,7 +187,6 @@ def run(
     assignments = store.write_round(
         "assignments", 0, assignments, lineage={"op": "cc"}, blocking=False
     )
-    tick("clustering")
 
     metrics = None
     if labels is not None:
@@ -324,7 +194,6 @@ def run(
         metrics = macro_micro(prf)
 
     store.flush()  # join async lineage/metrics writes
-    tick("flush")
 
     return PipelineResult(
         features=features, scored_pairs=scored, assignments=assignments, metrics=metrics

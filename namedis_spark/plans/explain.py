@@ -2,8 +2,8 @@
 
 The scale discipline (SURVEY.md §4) is enforceable, not aspirational:
 these helpers read `.explain("formatted")` output so tests can assert that
-a plan broadcasts its small side, pushes filters into the parquet scan,
-prunes columns, and keeps the hot path inside WholeStageCodegen.
+a plan pushes filters into the parquet scan, prunes columns, and runs no
+quadratic join or row-at-a-time Python.
 """
 
 from __future__ import annotations
@@ -19,10 +19,6 @@ def formatted_plan(df: DataFrame) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-def uses_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in formatted_plan(df)
 
 
 def pushed_filters(df: DataFrame) -> list[str]:
@@ -46,10 +42,6 @@ def read_schema_columns(df: DataFrame) -> list[str]:
                 if ":" in part:
                     cols.append(part.split(":")[0])
     return cols
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    return formatted_plan(df).count("WholeStageCodegen")
 
 
 def quadratic_join_nodes(df: DataFrame) -> list[str]:

@@ -15,9 +15,10 @@ Conventions:
   year_discount_pairs, stage2_coauthor_boost) enumerate ALL within-block
   pairs so the oracle can replay them value-for-value — O(block²) by
   design, for parity checking at small SF only. The production pipeline
-  routes through the capped/salted candidate paths
-  (operators/blocking.evidence_pairs + score_blocks_exhaustive); never
-  lift the enumeration queries into a production plan.
+  routes pairs by block size instead: the df-capped
+  operators/blocking.evidence_pairs for big blocks, the in-worker bucket
+  grid of scoring.score_blocks_exhaustive for small ones; never lift the
+  enumeration queries into a production plan.
 """
 
 from __future__ import annotations

@@ -12,6 +12,18 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _default_driver_mem() -> str:
+    """About half of the host's MemTotal, capped at 32g: local mode runs
+    the driver and every executor thread in one JVM, and the Python workers
+    need the other half. Hosts without /proc/meminfo get the cap."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "32g"
+    return f"{max(1024, min(32 * 1024, kb // 2048))}m"
+
 # Defaults chosen for scale-out behavior, not just local speed:
 #  - AQE on: runtime coalescing + skew-join splitting (hot blocking keys).
 #  - Arrow on: every Python-side op is an Arrow-batched pandas UDF; no
@@ -23,9 +35,9 @@ _DEFAULTS = {
     # AQE coalescing keeps parallelismFirst=true (the default): several of
     # our small-byte shuffles are CPU-heavy (feature-map aggregation,
     # pair scoring), so coalescing them down to the 64MB byte target would
-    # serialize them. The Python scoring stage additionally pins its own
-    # partitioning explicitly (see score_pairs_fast) because its cost is
-    # Python CPU and it must also break hot-block skew.
+    # serialize them. The Python scoring stages additionally spread each
+    # block over a salted bucket grid (see score_pairs_grouped) because
+    # their cost is Python CPU and they must also break hot-block skew.
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # AQE's coalescing targets bytes, but our hot stages are Arrow-batched
     # Python scoring where CPU-per-byte is ~10-30x a JVM stage's: a 64MB
@@ -53,7 +65,8 @@ _DEFAULTS = {
     # local mode = one JVM for driver + all executor threads; size it for
     # the box (override with SPARK_GRAFT_DRIVER_MEM). On a real cluster
     # executors carry their own spark.executor.memory instead.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    or _default_driver_mem(),
 }
 
 # extra JVM flags (e.g. -XX:ActiveProcessorCount=N from scaling_bench's

@@ -212,8 +212,9 @@ def run_level(n_exec: int, data: str, warm_data: str) -> dict:
             capture_output=True, text=True, timeout=7200, env=env,
         )
         c1 = _counters()
-        # per-stage profile ticks (SPARK_GRAFT_PROFILE=1) land on the level's
-        # stderr — always save it for plan forensics
+        # the level's stderr carries Spark's log — always save it for plan
+        # forensics (per-stage wall, CPU and shuffle come from
+        # `perfbench/run.py --trace 1`)
         with open(f"/tmp/scale_level_{n_exec}x.stderr", "w") as f:
             f.write(out.stderr)
         if out.returncode != 0:

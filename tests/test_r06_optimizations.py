@@ -89,6 +89,9 @@ def test_python_shingles_match_sql_chain(spark):
         (5, "aaaaaa"),  # heavy duplicate grams
         (6, "Ünïcode größe 文字 test"),  # non-ascii survives tokenization rules
         (7, "one two one two one"),
+        # "pie" and "3fj" share the md5 7-hex prefix: the SQL chain keeps
+        # their 28-bit value once
+        (8, "pie 3fj"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     fast = {
