@@ -76,11 +76,12 @@ def main() -> None:
     ap.add_argument(
         "--fresh-cache",
         action="store_true",
-        help="clear the feature cache between reps (cold per-query cost)",
+        help="release the session memo between reps (cold per-query cost)",
     )
     args = ap.parse_args()
 
-    from namedis_spark.queries import REGISTRY, clear_feature_cache
+    from namedis_spark.caching import release
+    from namedis_spark.queries import REGISTRY
     from namedis_spark.session import get_spark
 
     spark = get_spark(
@@ -109,7 +110,7 @@ def main() -> None:
         times = []
         for _ in range(args.reps):
             if args.fresh_cache:
-                clear_feature_cache()
+                release(spark)
             dt, n = _timed(spark, name, fn, args.noop)
             times.append(dt)
             print(f"# {name}: rows={n} t={dt}s", file=sys.stderr)

@@ -17,7 +17,7 @@ scorers' ``SideTables``.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from namedis_spark.operators.scoring import ScoringParams, SideTables
 
@@ -452,7 +452,7 @@ def _iterate_ambiguity_frame(df, rounds: int):
 # universe of a 10^12-turn corpus can reach 10^7-10^8 distinct surfaces.
 # 10M rows x (2 short strings + 2 name parts + 2 numerics) is ~1 GB of
 # pandas — safe for the constant driver allotment; past it the driver-side
-# fast path must NOT be attempted. Override with SPARK_GRAFT_MAX_DRIVER_NAMES.
+# fast path must NOT be attempted.
 AMBIG_MAX_DRIVER_NAMES = 10_000_000
 
 
@@ -460,7 +460,7 @@ def key_ambiguity_pdf_bounded(
     features: DataFrame,
     rounds: int = AMBIG_MAX_ROUNDS,
     hits: DataFrame | None = None,
-    max_rows: int | None = None,
+    max_rows: int = AMBIG_MAX_DRIVER_NAMES,
 ):
     """Bounded driver-side fixed point: pull the seed table only if the
     name universe fits the documented driver bound, else return ``None``
@@ -473,12 +473,6 @@ def key_ambiguity_pdf_bounded(
     the scaling harness those serial barriers were the side-table stage's
     dominant non-scaling cost.
     """
-    import os
-
-    if max_rows is None:
-        max_rows = int(
-            os.environ.get("SPARK_GRAFT_MAX_DRIVER_NAMES", AMBIG_MAX_DRIVER_NAMES)
-        )
     df = _ambiguity_seed(features, hits).limit(max_rows + 1).toPandas()
     if len(df) > max_rows:
         return None
@@ -822,19 +816,6 @@ def tool_simi(features: DataFrame, min_shared: int = 1) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 TAXO_ATTENUATION = 0.8  # freq pass-up attenuation (ConceptNet.pm:27)
-
-
-def build_taxonomy(spark: SparkSession, vocab_prefix: str = "term", n_cats: int = 40) -> DataFrame:
-    """Deterministic mini-taxonomy over the synthetic vocabulary
-    (FIXTURES.md §3): term → category → super-category → root.
-    Edge format mirrors wikipedia/csmathling.txt (term, parent, depth)."""
-    rows = []
-    for c in range(n_cats):
-        super_c = f"supercat_{c % 5:02d}"
-        rows.append((f"cat_{c:02d}", super_c, 2))
-    for s in range(5):
-        rows.append((f"supercat_{s:02d}", "CONCEPT_NET_ROOT", 1))
-    return spark.createDataFrame(rows, "term string, parent string, depth int")
 
 
 def term_category(term_col):

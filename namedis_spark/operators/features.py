@@ -136,23 +136,20 @@ def conversation_features(transcripts: DataFrame) -> DataFrame:
     )
 
 
-_IRR_DF_MEMO: dict[int, "DataFrame"] = {}
-
-
 def _irregulars_df(spark) -> DataFrame:
-    """Per-session memo of the irregular-lemma lookup table: the table is
-    a constant, and re-running createDataFrame per query call re-paid the
+    """Session-memoized irregular-lemma lookup table: the table is a
+    constant, and re-running createDataFrame per query call re-paid the
     driver-side conversion on every term-exploding query."""
+    from namedis_spark.caching import memo
     from namedis_spark.functions.text import IRREGULAR_LEMMAS
 
-    key = id(spark)
-    if key not in _IRR_DF_MEMO:
-        if len(_IRR_DF_MEMO) > 8:
-            _IRR_DF_MEMO.clear()
-        _IRR_DF_MEMO[key] = spark.createDataFrame(
+    return memo(
+        spark,
+        "irregular_lemmas",
+        lambda: spark.createDataFrame(
             sorted(IRREGULAR_LEMMAS.items()), "_tok string, _irr_lemma string"
-        )
-    return _IRR_DF_MEMO[key]
+        ),
+    )
 
 
 def exploded_content_terms(

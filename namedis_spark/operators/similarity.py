@@ -24,7 +24,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from namedis_spark.caching import tracked_persist
+from namedis_spark.caching import memo, tracked_persist
 
 HYPERPLANE_SEED = 7
 ANN_N_PLANES = 6
@@ -104,32 +104,9 @@ def adaptive_planes_expr(count_expr: str) -> str:
     )
 
 
-_COUNT_MEMO: dict[tuple[int, int], int] = {}
-
-
-def _corpus_count(df: DataFrame) -> int:
-    """Memoized ``df.count()`` keyed by (session, semantic hash): the
-    adaptive-plane scalar is a pure function of the corpus, so one count
-    job per session suffices. Bounded: the memo holds ints only and is
-    cleared with the session-scoped caches (``caching.release_all`` keeps
-    DataFrame handles; this keeps none)."""
-    try:
-        key = (id(df.sparkSession), df.semanticHash())
-    except Exception:  # semanticHash unavailable (e.g. connect) — no memo
-        return df.count()
-    if key not in _COUNT_MEMO:
-        if len(_COUNT_MEMO) > 256:
-            _COUNT_MEMO.clear()
-        _COUNT_MEMO[key] = df.count()
-    return _COUNT_MEMO[key]
-
-
-_PROBE_MEMO: dict[tuple[int, int], tuple[int, int, int]] = {}
-
-
 def _corpus_probe(df: DataFrame, col: str = "embedding") -> tuple[int, int, int]:
-    """Memoized (n_rows, min_dim, max_dim) of the corpus in ONE tiny
-    aggregate job (same memo discipline as ``_corpus_count``). Feeds the
+    """(n_rows, min_dim, max_dim) of the corpus in ONE tiny aggregate job,
+    memoized in the session memo per (semantic plan, column). Feeds the
     adaptive plane count and the literal-plane emission below."""
     def probe() -> tuple[int, int, int]:
         r = df.agg(
@@ -140,14 +117,10 @@ def _corpus_probe(df: DataFrame, col: str = "embedding") -> tuple[int, int, int]
         return (int(r["n"]), int(r["lo"] or 0), int(r["hi"] or 0))
 
     try:
-        key = (id(df.sparkSession), df.semanticHash())
-    except Exception:
+        key = ("corpus_probe", df.semanticHash(), col)
+    except Exception:  # semanticHash unavailable (e.g. connect) — no memo
         return probe()
-    if key not in _PROBE_MEMO:
-        if len(_PROBE_MEMO) > 256:
-            _PROBE_MEMO.clear()
-        _PROBE_MEMO[key] = probe()
-    return _PROBE_MEMO[key]
+    return memo(df.sparkSession, key, probe)
 
 
 def _plane_coeff(t: int, j: int, d: int, seed: int) -> float:
@@ -216,7 +189,7 @@ def _sig_literal_expr(
     )
 
 
-def _resolve_planes(spark, n_planes: int | None, cnt: int) -> int:
+def _resolve_planes(n_planes: int | None, cnt: int) -> int:
     """Adaptive plane count as an int — exact-integer twin of
     ``adaptive_planes_expr``: ceil(log2(max(cnt,2)/8)) is the smallest k
     with 2^(k+3) >= cnt, i.e. (cnt-1).bit_length() - 3. Verified equal to
@@ -244,9 +217,10 @@ def table_buckets(
     ``n_planes=None`` → adaptive: planes from the corpus count (a
     single-row aggregate collected to the driver — a scalar, never data;
     the oracle computes the identical count via a scalar subquery). The
-    probe is memoized per (session, semantic plan) so repeated
-    invocations over the same corpus — the bench loop, LSH probes over a
-    shared table — pay the scan once per session, not per call.
+    probe is held in the session memo (``caching.memo``), keyed by
+    semantic plan and column, so repeated invocations over the same
+    corpus — the bench loop, LSH probes over a shared table — pay the
+    scan once per session, not per call.
 
     Plane coefficients are emitted as a LITERAL (table, plane, dim)
     tensor (see ``_planes_literal``): they are row-invariant, and the
@@ -255,7 +229,7 @@ def table_buckets(
     bit-identical buckets. ``sig_expr_spark`` remains the arithmetic
     reference form (and the oracle's shape)."""
     cnt, lo, hi = _corpus_probe(embeddings)
-    planes = _resolve_planes(embeddings.sparkSession, n_planes, cnt)
+    planes = _resolve_planes(n_planes, cnt)
     sigs = F.expr(
         _sig_literal_expr(n_tables, planes, hi, uniform=(lo == hi), seed=seed)
     )

@@ -66,9 +66,6 @@ def transcripts_sql(dialect: str) -> str:
     """
 
 
-_VIEWS_REGISTERED: dict[int, str] = {}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register the input tables as temp views — memoized per (session,
     sf_dir): every registration re-reads ten parquet footers on the driver
@@ -76,14 +73,11 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     form re-paid that per query (guide §6 — cache file/metadata listings).
     Re-registers whenever the session's last-registered dir differs, so
     multi-SF sessions (tests, the oracle gate) stay correct."""
-    # tableExists guards against id() reuse after a session is GC'd
-    if _VIEWS_REGISTERED.get(id(spark)) == sf_dir and spark.catalog.tableExists(
-        SPARK_TABLES[0]
-    ):
+    if getattr(spark, "_namedis_views", None) == sf_dir:
         return
     for t in SPARK_TABLES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
-    _VIEWS_REGISTERED[id(spark)] = sf_dir
+    spark._namedis_views = sf_dir
 
 
 def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,47 +85,18 @@ def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(transcripts_sql("spark"))
 
 
-_FEATURE_CACHE: dict[tuple[int, str], DataFrame] = {}
-_FEATURE_CACHE_MAX = 4  # LRU bound: long-lived sessions iterating many
-# sf_dirs must not accumulate persisted DataFrames
-
-
 def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(session, sf_dir) LRU-cached feature table — several queries fan
-    out multiple aggregations over it; persisting avoids re-running the
-    feature extraction scan per action. Oldest entries are unpersisted once
-    the bound is hit; `clear_feature_cache` releases everything (call it on
-    session close)."""
+    """Per-(session, sf_dir) persisted feature table, held in the session
+    memo — several queries fan out multiple aggregations over it;
+    persisting avoids re-running the feature extraction scan per action."""
+    from namedis_spark.caching import memo
     from namedis_spark.operators.features import conversation_features
 
-    key = (id(spark), sf_dir)
-    if key in _FEATURE_CACHE:
-        _FEATURE_CACHE[key] = _FEATURE_CACHE.pop(key)  # move to MRU end
-        return _FEATURE_CACHE[key]
-    while len(_FEATURE_CACHE) >= _FEATURE_CACHE_MAX:
-        oldest = next(iter(_FEATURE_CACHE))
-        try:
-            _FEATURE_CACHE.pop(oldest).unpersist()
-        except Exception:
-            pass  # session may already be stopped
-    _FEATURE_CACHE[key] = conversation_features(
-        load_transcripts(spark, sf_dir)
-    ).persist()
-    return _FEATURE_CACHE[key]
-
-
-def clear_feature_cache() -> None:
-    """Unpersist and drop every cached feature table plus the tracked
-    operator intermediates (session-close hook)."""
-    from namedis_spark.caching import release_all
-
-    while _FEATURE_CACHE:
-        _, df = _FEATURE_CACHE.popitem()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    release_all()
+    return memo(
+        spark,
+        ("features", sf_dir),
+        lambda: conversation_features(load_transcripts(spark, sf_dir)).persist(),
+    )
 
 
 def _assert_golden(
@@ -2171,13 +2136,6 @@ def term_closeness_q(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # §2.2 cleaning + training-data text ops (documents table)
 # ---------------------------------------------------------------------------
-
-
-def _duck_replace_chain(col: str, pairs) -> str:
-    expr = col
-    for a, b in pairs:
-        expr = f"replace({expr}, '{a}', \"{b}\")" if b == "'" else f"replace({expr}, '{a}', '{b}')"
-    return expr
 
 
 def _xml_restore_oracle() -> str:

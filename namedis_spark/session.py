@@ -121,9 +121,6 @@ def get_spark(
     return spark
 
 
-_WARMED: set[int] = set()
-
-
 def _warm_session(spark: SparkSession) -> None:
     """One-time, data-independent engine warm-up per session: a trivial
     aggregate job initializes the task scheduler / codegen / shuffle
@@ -132,13 +129,9 @@ def _warm_session(spark: SparkSession) -> None:
     spark.python.worker.reuse). Heavyweight init belongs to session
     construction, not to whichever query happens to run first (guide
     §4.5); nothing here touches input data or caches any result."""
-    key = id(spark)
-    if key in _WARMED:
+    if getattr(spark, "_namedis_warmed", False):
         return
-    _WARMED.add(key)
-    if len(_WARMED) > 64:
-        _WARMED.clear()
-        _WARMED.add(key)
+    spark._namedis_warmed = True
     try:
         import pyspark.sql.functions as F
 
@@ -153,13 +146,11 @@ def _warm_session(spark: SparkSession) -> None:
 
 
 def close_session(spark: SparkSession) -> None:
-    """Stop a session cleanly: release the query-registry feature cache
-    (persisted DataFrames) before stopping the JVM."""
-    from namedis_spark.caching import release_all
-    from namedis_spark.queries import clear_feature_cache
+    """Stop a session cleanly: release the session memo (persisted
+    DataFrames) before stopping the JVM."""
+    from namedis_spark.caching import release
 
-    clear_feature_cache()
-    release_all()
+    release(spark)
     spark.stop()
 
 

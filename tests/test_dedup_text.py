@@ -527,19 +527,24 @@ def test_embedding_lsh_bucket_cap(spark):
     assert (100, 101) in cands
 
 
-def test_corpus_count_memoized(spark, emb100):
-    """The adaptive-plane corpus count must be computed once per
-    (session, semantic plan) — repeated LSH invocations over the same
-    corpus reuse the scalar instead of re-scanning (r4 ADVICE /
+def test_corpus_probe_memoized(spark, emb100):
+    """The corpus probe (count, min/max vector size) must run once per
+    (session, semantic plan, column) — repeated LSH invocations over the
+    same corpus reuse it instead of re-scanning (r4 ADVICE /
     embedding_cosine_dups forensics)."""
     from namedis_spark.operators import similarity as S
 
-    S._COUNT_MEMO.clear()
-    n1 = S._corpus_count(emb100)
-    assert n1 == emb100.count()
-    assert len(S._COUNT_MEMO) == 1
-    # poison the memo: a second call must hit it, not recount
-    key = next(iter(S._COUNT_MEMO))
-    S._COUNT_MEMO[key] = 12345
-    assert S._corpus_count(emb100) == 12345
-    S._COUNT_MEMO.clear()
+    emb = emb100.withColumn("head", F.slice("embedding", 1, 8))
+    key = ("corpus_probe", emb.semanticHash(), "embedding")
+    try:
+        assert S._corpus_probe(emb) == (100, 16, 16)
+        assert key in spark._namedis_memo
+        # poison the memo: a second call must hit it, not re-probe
+        spark._namedis_memo[key] = (12345, 1, 2)
+        assert S._corpus_probe(emb) == (12345, 1, 2)
+        # the key includes the column: the same plan probed on another
+        # column is a separate entry
+        assert S._corpus_probe(emb, "head") == (100, 8, 8)
+    finally:
+        spark._namedis_memo.pop(key, None)
+        spark._namedis_memo.pop(key[:2] + ("head",), None)

@@ -46,7 +46,7 @@ def test_resolve_planes_matches_sql_expr(spark):
     )
     row = spark.sql(f"SELECT {sel}").head()
     for i, c in enumerate(counts):
-        assert row[f"p{i}"] == S._resolve_planes(spark, None, c), c
+        assert row[f"p{i}"] == S._resolve_planes(None, c), c
 
 
 def test_table_buckets_matches_arithmetic_form(spark):
