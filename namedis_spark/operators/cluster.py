@@ -166,7 +166,11 @@ def connected_components(
     With ``store``, every round's edge state is a committed snapshot;
     ``resume=True`` re-enters at the last complete round and — because each
     round is a pure function of the previous snapshot — yields byte-identical
-    final assignments after any kill point.
+    final assignments after any kill point. That round is probed once with
+    ``_is_star`` first: a min-rooted star forest is the large-star/
+    small-star fixpoint, so a completed checkpoint is returned as is, with
+    no new round run or committed. A round left by a kill mid-loop is not
+    a star forest and iterates from round ``latest + 1`` as usual.
     """
     e = edges.select(
         F.col("src").cast("string"), F.col("dst").cast("string")
@@ -178,7 +182,8 @@ def connected_components(
         latest = store.latest_round(name)
         if latest is not None:
             e = store.read_round(name, latest)
-            start_round = latest + 1
+            # a committed fixpoint needs no further round
+            start_round = max_rounds if _is_star(e) else latest + 1
             resumed = True
     if not resumed:
         # local contraction absorbs the initial distinct (union-find dedups

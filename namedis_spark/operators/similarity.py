@@ -168,19 +168,22 @@ def _sig_literal_expr(
     """Array of the T bucket signatures from literal planes. ``uniform``
     (all rows share ``dim``) takes the zip_with fast path; ragged corpora
     fall back to an element_at walk bounded by each row's own size, which
-    matches ``sig_expr_spark``'s per-row-dim semantics exactly."""
+    matches ``sig_expr_spark``'s per-row-dim semantics exactly. The fast
+    path is guarded per row (``size = dim``): a stale corpus probe that
+    calls a ragged corpus uniform degrades to the walk, instead of letting
+    zip_with null-pad the shorter side into wrong buckets."""
     lit = _planes_literal(n_tables, n_planes, max(dim, 1), seed)
     plane = f"element_at(element_at({lit}, t + 1), j + 1)"
+    dot = (
+        f"aggregate(sequence(0, size({emb}) - 1), 0d,"
+        f" (acc, d) -> acc + cast(element_at({emb}, d + 1) as double)"
+        f" * element_at({plane}, d + 1))"
+    )
     if uniform:
         dot = (
-            f"aggregate(zip_with(transform({emb}, x -> cast(x as double)),"
-            f" {plane}, (x, y) -> x * y), 0d, (acc, x) -> acc + x)"
-        )
-    else:
-        dot = (
-            f"aggregate(sequence(0, size({emb}) - 1), 0d,"
-            f" (acc, d) -> acc + cast(element_at({emb}, d + 1) as double)"
-            f" * element_at({plane}, d + 1))"
+            f"if(size({emb}) = {dim}, aggregate(zip_with(transform({emb},"
+            f" x -> cast(x as double)), {plane}, (x, y) -> x * y), 0d,"
+            f" (acc, x) -> acc + x), {dot})"
         )
     return (
         f"transform(sequence(0, {n_tables - 1}), t -> aggregate("

@@ -84,21 +84,31 @@ def apply_exclusions(
 # ALREADY driver-collected downstream for the broadcast ancestor dicts
 # (ancestors_map_from_df / closeness_fn_from_df) — so a bounded in-driver
 # BFS with a distributed fallback follows the same documented pattern as
-# corpus.key_ambiguity_pdf_bounded. Past either bound the iterative
+# corpus.key_ambiguity_pdf_bounded. Past any bound the iterative
 # frontier-join loop below runs unchanged.
+#
+# Driver memory: the BFS holds every closure pair in its per-term seen
+# sets and in the closure's Arrow columns (built one depth layer at a
+# time, so no Python row list lives alongside them), and createDataFrame
+# then ships the columns to the executors. With long term names a row
+# count does not bound that, so the closure's estimated size — both names'
+# characters plus a fixed per-row overhead for the set entry, Arrow offsets
+# and depth — is capped too: peak driver memory stays within a small
+# multiple of CLOSURE_DRIVER_BYTE_BUDGET.
 CLOSURE_DRIVER_EDGE_BOUND = 200_000
 CLOSURE_DRIVER_ROW_CAP = 5_000_000
+CLOSURE_DRIVER_BYTE_BUDGET = 256 * 2**20
+CLOSURE_ROW_OVERHEAD_BYTES = 64
 
 
-def _closure_driver_bfs(
-    edge_rows: list,
-    extra: list | None,
-    max_height: int,
-    row_cap: int = CLOSURE_DRIVER_ROW_CAP,
-):
-    """Layered min-depth BFS over driver-resident edges. Returns
-    (rows, height) or None when the closure would exceed ``row_cap``
-    (caller falls back to the distributed loop)."""
+def _closure_driver_bfs(edge_rows: list, extra: list | None, max_height: int):
+    """Layered min-depth BFS over driver-resident edges. Returns (arrow
+    table of (term, ancestor, depth), height), or None when the closure
+    would exceed ``CLOSURE_DRIVER_ROW_CAP`` rows or an estimated
+    ``CLOSURE_DRIVER_BYTE_BUDGET`` bytes (caller falls back to the
+    distributed loop)."""
+    import pyarrow as pa
+
     parents: dict[str, list[str]] = {}
     nodes: set[str] = set()
     for t, p in edge_rows:
@@ -107,9 +117,32 @@ def _closure_driver_bfs(
         nodes.add(p)
     if extra:
         nodes.update(extra)
-    rows: list[tuple[str, str, int]] = [(n, n, 0) for n in nodes]
+    layers: list = []
+    n_rows = n_bytes = 0
+
+    def add_layer(pairs: list[tuple[str, str]], depth: int) -> bool:
+        nonlocal n_rows, n_bytes
+        n_rows += len(pairs)
+        n_bytes += sum(len(t) + len(a) for t, a in pairs)
+        n_bytes += CLOSURE_ROW_OVERHEAD_BYTES * len(pairs)
+        if n_rows > CLOSURE_DRIVER_ROW_CAP or n_bytes > CLOSURE_DRIVER_BYTE_BUDGET:
+            return False
+        layers.append(
+            pa.record_batch(
+                [
+                    pa.array([t for t, _ in pairs], pa.string()),
+                    pa.array([a for _, a in pairs], pa.string()),
+                    pa.array([depth] * len(pairs), pa.int32()),
+                ],
+                names=["term", "ancestor", "depth"],
+            )
+        )
+        return True
+
     seen: dict[str, set[str]] = {n: {n} for n in nodes}
     frontier: list[tuple[str, str]] = [(n, n) for n in nodes]
+    if not add_layer(frontier, 0):
+        return None
     height = 0
     for depth in range(1, max_height + 1):
         nxt: list[tuple[str, str]] = []
@@ -122,11 +155,10 @@ def _closure_driver_bfs(
         if not nxt:
             break
         height = depth
-        rows.extend((t, p, depth) for t, p in nxt)
-        if len(rows) > row_cap:
+        if not add_layer(nxt, depth):
             return None
         frontier = nxt
-    return rows, height
+    return pa.Table.from_batches(layers), height
 
 
 def ancestor_closure(
@@ -149,7 +181,8 @@ def ancestor_closure(
     depth 0).
 
     Taxonomy-sized inputs (≤ ``driver_edge_bound`` distinct edges, with
-    the resulting closure under ``CLOSURE_DRIVER_ROW_CAP`` rows) take a
+    the resulting closure under ``CLOSURE_DRIVER_ROW_CAP`` rows and
+    ``CLOSURE_DRIVER_BYTE_BUDGET`` estimated bytes) take a
     driver-side BFS instead: one bounded collect + an Arrow
     createDataFrame replaces ~height × (join + anti-join + checkpoint)
     barrier-latency rounds. Identical output (parity-tested both sides
@@ -174,26 +207,16 @@ def ancestor_closure(
                 max_height,
             )
             if res is not None:
-                rows, height = res
+                tbl, height = res
                 e_raw.unpersist()
                 if stats is not None:
                     stats["rounds"] = height
                     stats["driver_path"] = True
-                import pyarrow as pa
-
-                spark = edges.sparkSession
-                tbl = pa.table(
-                    {
-                        "term": pa.array([r[0] for r in rows], pa.string()),
-                        "ancestor": pa.array([r[1] for r in rows], pa.string()),
-                        "depth": pa.array([r[2] for r in rows], pa.int32()),
-                    }
-                )
                 # arrow table in (skips the pandas conversion); checkpoint:
                 # downstream plans reference the closure several times —
                 # without it every scan re-ships the parallelized driver
                 # rows to the executors
-                return spark.createDataFrame(
+                return edges.sparkSession.createDataFrame(
                     tbl, schema="term string, ancestor string, depth int"
                 ).localCheckpoint(eager=True)
     e = e_raw.distinct().persist()

@@ -11,6 +11,7 @@ Sandbox usage (synthetic input):
 
     python scripts/run_pipeline.py --blocks 5 --checkpoint /tmp/ckpt --out /tmp/out
     python scripts/run_pipeline.py ... --resume     # re-enter after a kill
+                                                    # (same inputs only)
 """
 
 from __future__ import annotations
@@ -40,7 +41,14 @@ def main() -> None:
         "(seedMergeSharingCoauthor) before the final closure",
     )
     ap.add_argument("--threshold", type=float, default=None)
-    ap.add_argument("--resume", action="store_true")
+    ap.add_argument(
+        "--resume",
+        action="store_true",
+        help="re-enter the checkpoint at its last committed stage; raises when "
+        "the parameters, --seeds or the --input files differ from the ones "
+        "recorded in the checkpoint's manifest.json (a synthesized input is "
+        "checked by schema only)",
+    )
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 

@@ -76,6 +76,28 @@ def test_cc_checkpoint_resume_identical(spark, tmp_path):
     assert resumed == full
 
 
+def test_cc_resume_iterates_from_non_star_round(spark, tmp_path):
+    """A committed round that is not yet the fixpoint (a kill mid-CC) must
+    be iterated on resume, not taken as final by the resume probe; once the
+    committed round is a star forest, a further resume runs no round."""
+    path = spark.createDataFrame(
+        [("b", "a"), ("c", "b"), ("d", "c")], "src string, dst string"
+    )
+    store = CheckpointStore(spark, str(tmp_path / "ck"))
+    store.write_round("cc", 0, path)
+    store.flush()
+
+    def resume():
+        out = connected_components(spark, path.limit(0), store=store, resume=True)
+        return {r["node"]: r["cluster_id"] for r in out.collect()}
+
+    assert resume() == {"b": "a", "c": "a", "d": "a"}
+    rounds = store.complete_rounds("cc")
+    assert len(rounds) > 1
+    assert resume() == {"b": "a", "c": "a", "d": "a"}
+    assert store.complete_rounds("cc") == rounds
+
+
 def test_cc_metrics_lineage_written(spark, tmp_path):
     df = spark.createDataFrame([("a", "b"), ("b", "c")], "src string, dst string")
     store = CheckpointStore(spark, str(tmp_path / "m"))

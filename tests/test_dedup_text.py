@@ -548,3 +548,30 @@ def test_corpus_probe_memoized(spark, emb100):
     finally:
         spark._namedis_memo.pop(key, None)
         spark._namedis_memo.pop(key[:2] + ("head",), None)
+
+
+def test_stale_uniform_probe_falls_back_per_row(spark):
+    """A stale probe that calls a ragged corpus uniform (ADVICE
+    similarity.py) must not null-pad the shorter rows in zip_with: each row
+    whose size is not the probed dim takes the exact element_at walk."""
+    from namedis_spark.operators import similarity as S
+
+    rows = [
+        (i, [float((i * 7 + d * 3) % 11 - 5) for d in range(3 if i % 2 else 4)])
+        for i in range(40)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    key = ("corpus_probe", emb.semanticHash(), "embedding")
+
+    def buckets():
+        return sorted(
+            (r["vec_id"], r["bucket"]) for r in S.hyperplane_buckets(emb).collect()
+        )
+
+    try:
+        exact = buckets()
+        assert spark._namedis_memo[key] == (40, 3, 4)
+        spark._namedis_memo[key] = (40, 4, 4)  # stale: uniform at dim 4
+        assert buckets() == exact
+    finally:
+        spark._namedis_memo.pop(key, None)

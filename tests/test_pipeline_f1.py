@@ -97,17 +97,10 @@ def test_pipeline_with_seeds_coclusters_seed_members(spark, fixture_data, tmp_pa
     assert res.metrics["macro_f1"] >= 0.99
 
 
-def test_pipeline_seeded_distinct_seeds_stay_separate(spark, tmp_path_factory):
-    """Reference seeded composition (clust.pl:946-957): stage-1 coauthor
-    merging is REPLACED by seedMergeSharingCoauthor, so two DISTINCT human
-    seed clusters whose conversations pairwise share >=2 coauthors must NOT
-    be re-merged by a stage1-only edge; only stage-2 similarity could join
-    them, and here the >6-year gap zeroes the year discount."""
+def _two_seed_input(spark):
+    """Four conversations in one block, two per seed, all sharing the
+    same two coauthors; returns (transcripts, seeds)."""
     import datetime
-
-    import pyspark.sql.functions as F
-
-    from namedis_spark import pipeline
 
     def turns(conv, year, texts):
         ts = datetime.datetime(year, 6, 1)
@@ -130,6 +123,20 @@ def test_pipeline_seeded_distinct_seeds_stay_separate(spark, tmp_path_factory):
         [("c1", "S1"), ("c2", "S1"), ("c3", "S2"), ("c4", "S2")],
         "conv_id string, seed_id string",
     )
+    return t, seeds
+
+
+def _assigned(res):
+    return sorted(map(tuple, res.assignments.collect()))
+
+
+def test_pipeline_seeded_distinct_seeds_stay_separate(spark, tmp_path_factory):
+    """Reference seeded composition (clust.pl:946-957): stage-1 coauthor
+    merging is REPLACED by seedMergeSharingCoauthor, so two DISTINCT human
+    seed clusters whose conversations pairwise share >=2 coauthors must NOT
+    be re-merged by a stage1-only edge; only stage-2 similarity could join
+    them, and here the >6-year gap zeroes the year discount."""
+    t, seeds = _two_seed_input(spark)
     ckpt = str(tmp_path_factory.mktemp("ckpt_seed_sep"))
     res = pipeline.run(spark, t, ckpt, seeds=seeds)
     a = {r["conv_id"]: r["cluster_id"] for r in res.assignments.collect()}
@@ -138,3 +145,76 @@ def test_pipeline_seeded_distinct_seeds_stay_separate(spark, tmp_path_factory):
     assert a["c3"] == a["c4"]
     # ... but the two seeds stay separate despite sharing both coauthors
     assert a["c1"] != a["c3"]
+
+
+def test_completed_resume_builds_no_side_tables(
+    spark, fixture_data, tmp_path, monkeypatch
+):
+    """A resume onto a completed checkpoint reads the committed stages: it
+    builds no side tables and commits no further CC round."""
+    from namedis_spark.operators import corpus
+    from namedis_spark.sources.checkpoint import CheckpointStore
+
+    t, _ = fixture_data
+    ckpt = str(tmp_path / "ckpt")
+    first = pipeline.run(spark, t, ckpt)
+    rounds = CheckpointStore(spark, ckpt).complete_rounds("cc")
+
+    def no_side_tables(*a, **kw):
+        raise AssertionError("side tables built on a completed resume")
+
+    monkeypatch.setattr(corpus, "side_tables", no_side_tables)
+    again = pipeline.run(spark, t, ckpt, resume=True)
+    assert _assigned(again) == _assigned(first)
+    assert CheckpointStore(spark, ckpt).complete_rounds("cc") == rounds
+
+
+def test_seeded_resume_reads_seed_merge(spark, tmp_path, monkeypatch):
+    """A seeded resume reads the committed seed_merge round instead of
+    re-running the seed merge."""
+    from namedis_spark.operators import seedmerge
+
+    t, seeds = _two_seed_input(spark)
+    ckpt = str(tmp_path / "ckpt")
+    first = pipeline.run(spark, t, ckpt, seeds=seeds)
+
+    def no_seed_merge(*a, **kw):
+        raise AssertionError("seed merge re-run on resume")
+
+    monkeypatch.setattr(seedmerge, "seed_merge_sharing_coauthor", no_seed_merge)
+    again = pipeline.run(spark, t, ckpt, seeds=seeds, resume=True)
+    assert _assigned(again) == _assigned(first)
+
+
+def test_resume_refuses_mismatched_inputs(spark, tmp_path):
+    """The checkpoint manifest: a resume with other parameters, seeds
+    toggled or another parquet input raises ValueError naming the key; a
+    matching resume goes through; committed rounds without a manifest
+    raise."""
+    import os
+
+    from namedis_spark.operators.scoring import ScoringParams
+
+    t, seeds = _two_seed_input(spark)
+    for d in ("in1", "in2"):
+        t.write.parquet(str(tmp_path / d))
+    t1 = spark.read.parquet(str(tmp_path / "in1"))
+    ckpt = str(tmp_path / "ckpt")
+    first = pipeline.run(spark, t1, ckpt)
+    with pytest.raises(ValueError, match="threshold"):
+        pipeline.run(
+            spark, t1, ckpt, params=ScoringParams(threshold=0.5), resume=True
+        )
+    with pytest.raises(ValueError, match="'seeds'"):
+        pipeline.run(spark, t1, ckpt, seeds=seeds, resume=True)
+    t2 = spark.read.parquet(str(tmp_path / "in2"))
+    with pytest.raises(ValueError, match="input_files"):
+        pipeline.run(spark, t2, ckpt, resume=True)
+    # a new read of the same files matches
+    again = pipeline.run(
+        spark, spark.read.parquet(str(tmp_path / "in1")), ckpt, resume=True
+    )
+    assert _assigned(again) == _assigned(first)
+    os.remove(os.path.join(ckpt, pipeline.MANIFEST))
+    with pytest.raises(ValueError, match="no manifest.json"):
+        pipeline.run(spark, t1, ckpt, resume=True)

@@ -183,6 +183,26 @@ def test_closure_driver_path_matches_distributed(spark):
     assert s_fast["rounds"] == s_slow["rounds"]
 
 
+def test_closure_byte_budget_takes_distributed_loop(spark, monkeypatch):
+    """Past the driver-BFS byte budget the closure is built by the
+    distributed loop, with the same rows."""
+    from namedis_spark.operators import taxonomy as T
+
+    edges = spark.createDataFrame(
+        [("a", "m1"), ("b", "m1"), ("m1", "top"), ("top", "ROOT")],
+        "term string, parent string",
+    )
+    s_fast: dict = {}
+    s_slow: dict = {}
+    fast = T.ancestor_closure(edges, stats=s_fast).collect()
+    monkeypatch.setattr(T, "CLOSURE_DRIVER_BYTE_BUDGET", 16)
+    slow = T.ancestor_closure(edges, stats=s_slow).collect()
+    assert s_fast.get("driver_path") is True
+    assert "driver_path" not in s_slow
+    key = lambda r: (r["term"], r["ancestor"], r["depth"])
+    assert sorted(map(key, fast)) == sorted(map(key, slow))
+
+
 # ---------------------------------------------------------------------------
 # cslr pair scoring: per-block enumeration vs distributed-join route
 # ---------------------------------------------------------------------------
