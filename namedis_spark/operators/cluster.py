@@ -214,9 +214,9 @@ def connected_components(
     for k in range(start_round, max_rounds):
         new_e = _small_star(_large_star(e))
         if store is not None:
-            # non-blocking: the round is materialized (and its convergence
-            # checksum observed) in one job; its parquet snapshot lands in
-            # the background — the next round starts immediately from the
+            # the round is materialized (and its convergence checksum
+            # observed) in one job; its parquet snapshot lands in the
+            # background — the next round starts immediately from the
             # in-memory checkpointed edges.
             new_e, cur = store.write_round(
                 name,
@@ -224,7 +224,6 @@ def connected_components(
                 new_e,
                 lineage={"op": "large_star+small_star", "prev_round": k - 1},
                 stat_cols=["src", "dst"],
-                blocking=False,
             )
         else:
             new_e = new_e.localCheckpoint(eager=True)

@@ -47,13 +47,15 @@ from namedis_spark.functions.core import (
     year_diff_discount,
     year_range_diff,
 )
+from namedis_spark.operators import blocking
 
 _TERM_CAT_RE = re.compile(r"^term(\d+)$")
 
 
 def category_of(term: str) -> str | None:
-    """Deterministic synthetic-taxonomy mapping (mirrors
-    corpus.term_category): termXXXX → cat_{XXXX mod 40}."""
+    """Deterministic synthetic-taxonomy mapping: termXXXX → cat_{XXXX mod
+    40}. The one term→category map: the scorers and the category-IC side
+    table (corpus.idf_ic_from_stats) both read it."""
     m = _TERM_CAT_RE.match(term)
     if not m:
         return None
@@ -130,8 +132,6 @@ SCORE_SCHEMA = T.StructType(
 def _as_dict(x) -> dict:
     if x is None:
         return {}
-    if isinstance(x, dict):
-        return dict(x)
     return dict(x)
 
 
@@ -350,7 +350,7 @@ class SideTables:
     max_df: float = 0.0
     # surname/givenname log-probability tables for the name-order vote
     # (testChnNameReverse, NLPUtil.pm:1750-1851; built by
-    # corpus.name_part_logprobs)
+    # corpus.term_and_name_stats)
     surname_lp: dict[str, float] = field(default_factory=dict)
     given_lp: dict[str, float] = field(default_factory=dict)
 
@@ -905,11 +905,7 @@ def _score_group_vectorized(
     cid_arr = prep_pdf["conv_id"].to_numpy()
     idx = {c: i for i, c in enumerate(cid_arr)}
     focus_arr = prep_pdf["focus_name"].to_numpy()
-    raw_arr = (
-        prep_pdf["focus_oriented"].fillna(prep_pdf["focus_raw"]).to_numpy()
-        if "focus_oriented" in prep_pdf.columns
-        else prep_pdf["focus_raw"].to_numpy()
-    )
+    raw_arr = prep_pdf["focus_oriented"].fillna(prep_pdf["focus_raw"]).to_numpy()
     yf = prep_pdf["year_from"].to_numpy(dtype=np.int64)
     yt = prep_pdf["year_to"].to_numpy(dtype=np.int64)
     tnorm = prep_pdf["t_norm"].to_numpy(dtype=np.float64)
@@ -1134,27 +1130,12 @@ def _broadcast_side(spark: SparkSession, side: SideTables, params: ScoringParams
     )
 
 
-def _salt_rows(df: DataFrame, nb) -> DataFrame:
-    """Hash each row's conversation into bucket ``b`` of ``nb`` (a column
-    expression) and replicate the row to the ``nb`` grid cells
-    (bi, bj) = (min(b, j), max(b, j)) its bucket touches, so every pair of
-    the block meets in exactly one cell (column ``j`` is the replica index)."""
-    return (
-        df.withColumn("b", F.pmod(F.xxhash64("conv_id"), nb).cast("int"))
-        .withColumn("j", F.explode(F.sequence(F.lit(0), nb - 1)))
-        .withColumn("bi", F.least(F.col("b"), F.col("j")))
-        .withColumn("bj", F.greatest(F.col("b"), F.col("j")))
-    )
-
-
 def score_pairs_grouped(
     spark: SparkSession,
     pairs: DataFrame,
     prep: DataFrame,
     side: SideTables,
     params: ScoringParams | None = None,
-    target_pairs_per_group: int = 10_000,
-    max_buckets: int = 32,
 ) -> DataFrame:
     """Cogrouped scorer: pairs and prepared features are cogrouped on a
     salted bucket grid and scored with ``applyInPandas``.
@@ -1164,11 +1145,12 @@ def score_pairs_grouped(
     Arrow-ships (and converts to Python dicts) each conversation's vectors
     once PER PAIR — measured ~3x the actual scoring compute.
 
-    Grid salting (the 'wei wang' skew duty, SURVEY.md §4): per block,
-    conversations hash into ``nb = ceil(sqrt(2·pairs/target))`` buckets;
-    a pair lands in grid cell (min(b1,b2), max(b1,b2)) and a conversation's
-    features ship to the nb cells its bucket touches. A hot block's O(n²)
-    pair workload spreads over nb(nb+1)/2 ≈ pairs/target tasks while its
+    Grid salting (``blocking``'s bucket grid): per block, conversations
+    hash into ``nb = blocking.pair_buckets(pairs)`` buckets; a pair lands in
+    grid cell (min(b1,b2), max(b1,b2)) and a conversation's features ship
+    to the nb cells its bucket touches. With target =
+    ``blocking.TARGET_PAIRS_PER_CELL``, a hot block's O(n²) pair workload
+    spreads over nb(nb+1)/2 ≈ pairs/target tasks while its
     features replicate only nb ≈ sqrt(pairs/target) times — versus
     pairs/target times under naive per-cell replication — and each cell
     decodes only its two buckets' features, not the whole block. Cold
@@ -1181,28 +1163,17 @@ def score_pairs_grouped(
     pairs = pairs.persist()
     counts = pairs.groupBy("block_key").agg(F.count(F.lit(1)).alias("n_pairs"))
     counts = counts.select(
-        "block_key",
-        F.least(
-            F.lit(max_buckets),
-            F.greatest(
-                F.lit(1),
-                F.ceil(
-                    F.sqrt(2.0 * F.col("n_pairs") / F.lit(target_pairs_per_group))
-                ),
-            ),
-        )
-        .cast("int")
-        .alias("nb"),
+        "block_key", blocking.pair_buckets(F.col("n_pairs")).alias("nb")
     )
-    b1 = F.pmod(F.xxhash64("conv_id1"), F.col("nb")).cast("int")
-    b2 = F.pmod(F.xxhash64("conv_id2"), F.col("nb")).cast("int")
+    b1 = blocking.bucket("conv_id1", F.col("nb"))
+    b2 = blocking.bucket("conv_id2", F.col("nb"))
     p2 = (
         pairs.join(F.broadcast(counts), "block_key")
         .withColumn("bi", F.least(b1, b2))
         .withColumn("bj", F.greatest(b1, b2))
         .drop("nb")
     )
-    pr2 = _salt_rows(
+    pr2 = blocking.salt_rows(
         prep.join(F.broadcast(counts), "block_key"), F.col("nb")
     ).drop("nb", "b", "j")
 
@@ -1232,9 +1203,8 @@ def score_blocks_exhaustive(
     spark: SparkSession,
     prep: DataFrame,
     side: SideTables,
+    sizes: DataFrame,
     params: ScoringParams | None = None,
-    bucket_rows: int = 96,
-    sizes: DataFrame | None = None,
 ) -> DataFrame:
     """All-pairs scoring for small blocks WITHOUT materializing a pair table.
 
@@ -1243,11 +1213,11 @@ def score_blocks_exhaustive(
     ``params.small_block_size`` conversations that is O(cap²) bounded work.
     Shipping an explicit pair row per candidate through a JVM join + Arrow
     round-trip costs more than the scoring itself, so here the *prepared feature rows*
-    are salted into a bucket grid (nb = ceil(n / bucket_rows) buckets per
-    block; a row replicates to the nb cells its bucket touches — the same
-    'wei wang' skew geometry as score_pairs_grouped) and the Python worker
-    enumerates its cell's pairs directly: triu within a bucket-diagonal
-    cell, full cross product otherwise.
+    are salted into ``blocking``'s bucket grid (nb = ceil(n / BUCKET_ROWS)
+    buckets per block for ``sizes``' row count n; a row replicates to the
+    nb cells its bucket touches — the same 'wei wang' skew geometry as
+    score_pairs_grouped) and the Python worker enumerates its cell's pairs
+    with ``blocking.cell_pairs``.
 
     Only rows that can matter downstream are emitted: stage-1 mergeable or
     score ≥ EMIT_FLOOR_FRAC × threshold. Output schema: (block_key,
@@ -1257,13 +1227,10 @@ def score_blocks_exhaustive(
 
     params = params or ScoringParams()
     bc = _broadcast_side(spark, side, params)
-    if sizes is None:
-        sizes = prep.groupBy("block_key").agg(F.count(F.lit(1)).alias("n"))
     feats = prep.join(
         F.broadcast(sizes.where(F.col("n") <= params.small_block_size)), "block_key"
     )
-    nb = F.ceil(F.col("n") / F.lit(bucket_rows)).cast("int")
-    feats = _salt_rows(feats, nb).drop("n", "j")
+    feats = blocking.salt_rows(feats, blocking.row_buckets(F.col("n"))).drop("n", "j")
 
     out_schema = T.StructType(
         [
@@ -1279,16 +1246,7 @@ def score_blocks_exhaustive(
     def fn(key, prep_pdf: pd.DataFrame) -> pd.DataFrame:
         block_key, bi, bj = key[0], int(key[1]), int(key[2])
         cids = prep_pdf["conv_id"].to_numpy()
-        b = prep_pdf["b"].to_numpy()
-        if bi == bj:
-            members = np.nonzero(b == bi)[0]
-            ii, jj = np.triu_indices(members.size, k=1)
-            i1, i2 = members[ii], members[jj]
-        else:
-            m1 = np.nonzero(b == bi)[0]
-            m2 = np.nonzero(b == bj)[0]
-            i1 = np.repeat(m1, m2.size)
-            i2 = np.tile(m2, m1.size)
+        i1, i2 = blocking.cell_pairs(prep_pdf["b"].to_numpy(), bi, bj)
         if i1.size == 0:
             return pd.DataFrame(
                 {f.name: pd.Series(dtype="object") for f in out_schema.fields}

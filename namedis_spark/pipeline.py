@@ -139,7 +139,6 @@ def run(
             conversation_features(transcripts),
             lineage={"op": "features"},
             stat_cols=["conv_id"],
-            blocking=False,
         )
 
     scored = _committed(store, "scored", resume)
@@ -183,7 +182,7 @@ def run(
         # + parquet snapshot): at 10^12 turns the scored-pair table is the
         # pipeline's biggest materialized intermediate.
         score_cols = ["stage1_mergeable", "score"]
-        small_scored = score_blocks_exhaustive(spark, prep, side, params, sizes=sizes)
+        small_scored = score_blocks_exhaustive(spark, prep, side, sizes, params)
         big_prep = prep.join(F.broadcast(big_keys), "block_key")
         big_scored = score_pairs_grouped(spark, pairs, big_prep, side, params)
         emit_floor = EMIT_FLOOR_FRAC * params.threshold
@@ -194,7 +193,7 @@ def run(
             big_scored.select(*PAIR_KEY_COLS, *score_cols)
         )
         scored = store.write_round(
-            "scored", 0, scored, lineage={"op": "blocking+scoring"}, blocking=False
+            "scored", 0, scored, lineage={"op": "blocking+scoring"}
         )
         # scored is checkpointed (plan truncated) — the block-size and
         # evidence-pair caches are fully consumed; release them so repeated
@@ -233,7 +232,6 @@ def run(
                 0,
                 seed_merge_sharing_coauthor(features, ion_assign, seeds),
                 lineage={"op": "seed_merge"},
-                blocking=False,
             )
         hubs = seed_merged.groupBy("cluster_id").agg(
             F.min("conv_id").alias("hub"), F.first("block_key").alias("block_key")
@@ -257,7 +255,7 @@ def run(
         spark, features, edges, store=store, resume=resume
     )
     assignments = store.write_round(
-        "assignments", 0, assignments, lineage={"op": "cc"}, blocking=False
+        "assignments", 0, assignments, lineage={"op": "cc"}
     )
 
     metrics = None

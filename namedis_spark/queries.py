@@ -14,10 +14,12 @@ Conventions:
   tfidf_cosine_pairs, jaccard_pairs, jaccard_type_pairs,
   year_discount_pairs, stage2_coauthor_boost) enumerate ALL within-block
   pairs so the oracle can replay them value-for-value — O(block²) by
-  design, for parity checking at small SF only. The production pipeline
-  routes pairs by block size instead: the df-capped
-  operators/blocking.evidence_pairs for big blocks, the in-worker bucket
-  grid of scoring.score_blocks_exhaustive for small ones; never lift the
+  design, for parity checking at small SF only. The CSLR family
+  (cslr_role_pairs, cslr_v1_pairs, jaccard_type_pairs) enumerates on the
+  bucket grid of operators/blocking, the same within-block enumerator as
+  the pipeline's scoring.score_blocks_exhaustive. The production pipeline
+  routes pairs by block size: the df-capped blocking.evidence_pairs for
+  big blocks, the in-worker bucket grid for small ones; never lift the
   enumeration queries into a production plan.
 """
 
@@ -1576,33 +1578,25 @@ _DUCK_CSLR_V1 = (
 )
 
 
-# Blocks up to this many conversations are pair-enumerated inside ONE
-# per-block Python task (each vector crosses the Arrow boundary once —
-# worst case cap²/2 ≈ 0.5M pairs ≈ a few seconds of in-worker scoring);
-# bigger blocks route through the distributed self-join + mapInPandas
-# shape so a hot block parallelizes across the cluster instead of
-# pinning one task with an O(block²) loop. Values identical either way.
-CSLR_BLOCK_ENUM_CAP = 1024
-
-
 def _cslr_scored_pairs(spark, sf_dir, log_fn, out_col: str = "log_cslr"):
-    """Within-block CSLR pair scores, size-routed.
+    """Within-block pair scores of ``log_fn`` over per-conversation
+    role-frequency vectors, enumerated on ``blocking``'s bucket grid.
 
     One transcript scan builds the per-conv (role-frequency map, block
-    key) side table. Blocks ≤ CSLR_BLOCK_ENUM_CAP enumerate and score
-    their pairs inside a per-block ``applyInPandas`` — each vector
-    crosses the Python boundary once, not once per pair (guide §8: the
-    all-join shape shipped two map payloads per pair row, ~450k map
-    cells through Arrow at sf0.1 for 225k pairs built from 1.5k
-    vectors). Blocks above the cap keep the distributed self-join +
-    mapInPandas shape (parallel across tasks — a single hot block must
-    not serialize into one worker). Pair set, pair order
-    (conv_id1 < conv_id2) and per-pair ``log_fn`` values are identical
-    on both routes. Still O(block²) by design — these are the
-    verification-only enumeration queries (module docstring); the
-    production pipeline scores through the capped/salted candidate
-    paths."""
+    key) side table. Each row is salted into nb = ceil(n / BUCKET_ROWS)
+    buckets of its n-conversation block, and one ``applyInPandas`` task
+    per grid cell scores the pairs ``blocking.cell_pairs`` lists — a
+    vector crosses the Python boundary once per cell its bucket touches,
+    not once per pair, and a hot block spreads over
+    nb(nb+1)/2 tasks instead of pinning one. Each pair is ordered
+    conv_id1 < conv_id2 and scored as ``log_fn(vec1, vec2)``: the vectors
+    follow the ids, since cslr_v2 breaks a sum/key-count tie toward its
+    first argument. Still O(block²) by design — these are the
+    verification-only enumeration queries (module docstring)."""
+    import numpy as np
     import pandas as pd
+
+    from namedis_spark.operators import blocking
 
     t = load_transcripts(spark, sf_dir)
     rf = t.groupBy(
@@ -1612,61 +1606,32 @@ def _cslr_scored_pairs(spark, sf_dir, log_fn, out_col: str = "log_cslr"):
         F.map_from_entries(F.collect_list(F.struct("role", "f"))).alias("vec"),
         F.min_by("role", "ti").alias("block_key"),
     )
-    sizes = side.groupBy("block_key").agg(F.count(F.lit(1)).alias("_bn"))
-    side = side.join(sizes, "block_key")
+    sizes = side.groupBy("block_key").agg(F.count(F.lit(1)).alias("n"))
+    side = blocking.salt_rows(
+        side.join(sizes, "block_key"), blocking.row_buckets(F.col("n"))
+    ).drop("n", "j")
 
-    cols = ["block_key", "conv_id1", "conv_id2", out_col]
     schema = (
         f"block_key string, conv_id1 string, conv_id2 string, {out_col} double"
     )
 
-    def score_block(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        bk = key[0]
-        ids = pdf["conv_id"].tolist()
+    def score_cell(key, pdf):
+        i1, i2 = blocking.cell_pairs(pdf["b"].to_numpy(), int(key[1]), int(key[2]))
+        ids = pdf["conv_id"].to_numpy()
         vecs = [dict(v) for v in pdf["vec"]]
-        order = sorted(range(len(ids)), key=lambda i: ids[i])
-        rows = []
-        for x, i in enumerate(order):
-            vi, ci = vecs[i], ids[i]
-            for j in order[x + 1 :]:
-                rows.append((bk, ci, ids[j], round(log_fn(vi, vecs[j]), 6)))
-        return pd.DataFrame(rows, columns=cols)
+        fwd = ids[i1] < ids[i2]
+        lo, hi = np.where(fwd, i1, i2), np.where(fwd, i2, i1)
+        vals = [round(log_fn(vecs[a], vecs[b]), 6) for a, b in zip(lo, hi)]
+        return pd.DataFrame(
+            {
+                "block_key": key[0],
+                "conv_id1": ids[lo],
+                "conv_id2": ids[hi],
+                out_col: np.array(vals, dtype=np.float64),
+            }
+        )
 
-    small_out = (
-        side.where(F.col("_bn") <= CSLR_BLOCK_ENUM_CAP)
-        .drop("_bn")
-        .groupBy("block_key")
-        .applyInPandas(score_block, schema)
-    )
-
-    big = side.where(F.col("_bn") > CSLR_BLOCK_ENUM_CAP).drop("_bn")
-    a = big.select(
-        "block_key", F.col("conv_id").alias("conv_id1"), F.col("vec").alias("v1")
-    )
-    b = big.select(
-        "block_key", F.col("conv_id").alias("conv_id2"), F.col("vec").alias("v2")
-    )
-    pairs = a.join(b, "block_key").where(F.col("conv_id1") < F.col("conv_id2"))
-
-    def score_pairs(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vals = [
-                round(log_fn(dict(v1), dict(v2)), 6)
-                for v1, v2 in zip(pdf["v1"], pdf["v2"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "block_key": pdf["block_key"],
-                    "conv_id1": pdf["conv_id1"],
-                    "conv_id2": pdf["conv_id2"],
-                    out_col: vals,
-                }
-            )
-
-    big_out = pairs.mapInPandas(score_pairs, schema=schema)
-    return small_out.unionByName(big_out)
+    return side.groupBy("block_key", "bi", "bj").applyInPandas(score_cell, schema)
 
 
 @q("cslr_v1_pairs", _DUCK_CSLR_V1)
@@ -3222,7 +3187,7 @@ def name_reverse_votes(spark, sf_dir):
     # The per-part counting runs DISTRIBUTED — the syllable-pair gate is
     # pushed into the query and only the aggregated (part, role, count)
     # table is collected, bounded by 2× the 407-syllable vocabulary, never
-    # O(#conversations) (mirrors corpus.name_part_logprobs).
+    # O(#conversations) (mirrors corpus.term_and_name_stats).
     import math as _math
 
     from namedis_spark.functions.text import _SYLLABLES

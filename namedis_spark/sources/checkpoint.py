@@ -75,97 +75,72 @@ class CheckpointStore:
         df: DataFrame,
         lineage: dict | None = None,
         stat_cols: list[str] | None = None,
-        blocking: bool = True,
     ) -> DataFrame | tuple[DataFrame, tuple[int, int]]:
         """Write round k, record per-partition lineage + metrics, return the
         lineage-truncated DataFrame.
+
+        The round is checkpointed in memory by one Spark action, and the
+        parquet snapshot write is submitted to the background pool, off
+        the critical path (``flush()`` joins it). A round only *exists* for
+        resume once its ``_SUCCESS`` marker lands, so a kill mid-write
+        simply re-enters one round earlier. Downstream stages read the
+        in-memory data instead of waiting for (then re-reading) parquet.
+        When the same ``name`` is written again, the previous round's cache
+        is released at the next ``flush()``.
 
         With ``stat_cols`` a (row_count, xor-of-xxhash64) content checksum
         is returned alongside — the CC loop's convergence signal. It is
         collected with ``Observation`` *inside the materialization job*, so a
         checkpointed round costs exactly one Spark action. The per-partition
-        lineage/metrics rows are always produced by an asynchronous job
-        (flush() joins them): bookkeeping never blocks the next round.
-        Output file count follows AQE's size-based coalescing, so small
-        rounds produce few files without capping write parallelism for
-        large ones.
-
-        ``blocking=False`` takes the parquet write itself off the critical
-        path: the round is persisted and materialized in one Spark action
-        and the snapshot file write is submitted to the background pool
-        (``flush()`` joins it). Commit semantics are unchanged — a round
-        only *exists* for resume once its ``_SUCCESS`` marker lands, so a
-        kill mid-write simply re-enters one round earlier. Downstream
-        stages read the in-memory data instead of waiting for (then
-        re-reading) parquet. When the same ``name`` is written again, the
-        previous round's cache is released once its background jobs finish.
+        lineage/metrics rows are produced by an asynchronous job after the
+        snapshot lands (flush() joins it): bookkeeping never blocks the next
+        round. Output file count follows AQE's size-based coalescing, so
+        small rounds produce few files without capping write parallelism
+        for large ones.
         """
         from pyspark.sql import Observation
 
         t0 = time.time()
         path = self._round_path(name, k)
         stats: tuple[int, int] | None = None
-        snap_fut: Future | None = None
-        stat_aggs = (
-            [
+        # EAGER localCheckpoint: (a) truncates the logical plan — the CC
+        # loop feeds each round's output back through large/small-star,
+        # which references its input ~a dozen times, so without truncation
+        # the analyzed plan grows exponentially with rounds and Catalyst
+        # hangs; (b) being eager, the checkpoint is finalized before the
+        # async metrics/snapshot jobs below start — a LAZY localCheckpoint
+        # races them ("Block ... does not exist"), and plain persist()
+        # fixes the race but re-opens (a). The convergence checksum rides
+        # the SAME materialization job as an Observation (CollectMetrics
+        # fires during the checkpoint scan), so a checkpointed round costs
+        # exactly ONE blocking Spark action — on latency-bound CC rounds
+        # the extra stats job was ~half the round's critical path.
+        obs = None
+        if stat_cols:
+            obs = Observation(f"{name}-r{k}")
+            df = df.observe(
+                obs,
                 F.count(F.lit(1)).alias("n"),
                 F.coalesce(
                     F.expr(f"bit_xor(xxhash64({', '.join(stat_cols)}))"), F.lit(0)
                 ).alias("h"),
-            ]
-            if stat_cols
-            else None
-        )
-        if blocking:
-            obs = None
-            if stat_aggs:
-                # piggyback the checksum on the write job itself
-                obs = Observation(f"{name}-r{k}")
-                df = df.observe(obs, *stat_aggs)
-            df.write.mode("overwrite").option(
-                "compression", SNAPSHOT_CODEC
-            ).parquet(path)
-            out = self.spark.read.parquet(path)
-            if obs is not None:
-                got = obs.get
-                stats = (int(got["n"]), int(got["h"]))
-        else:
-            # EAGER localCheckpoint: (a) truncates the logical plan — the CC
-            # loop feeds each round's output back through large/small-star,
-            # which references its input ~a dozen times, so without
-            # truncation the analyzed plan grows exponentially with rounds
-            # and Catalyst hangs; (b) being eager, the checkpoint is
-            # finalized before the async metrics/snapshot jobs below start —
-            # a LAZY localCheckpoint races them ("Block ... does not
-            # exist"), and plain persist() fixes the race but re-opens (a).
-            # The convergence checksum rides the SAME materialization job as
-            # an Observation (CollectMetrics fires during the checkpoint
-            # scan), so a non-blocking checkpointed round costs exactly ONE
-            # blocking Spark action — on latency-bound CC rounds the extra
-            # stats job was ~half the round's critical path.
-            obs = None
-            if stat_aggs:
-                obs = Observation(f"{name}-r{k}")
-                df = df.observe(obs, *stat_aggs)
-            out = df.localCheckpoint(eager=True)
-            if obs is not None:
-                got = obs.get
-                stats = (int(got["n"]), int(got["h"]))
-            snap_fut = self._metrics_pool.submit(
-                lambda: out.write.mode("overwrite")
-                .option("compression", SNAPSHOT_CODEC)
-                .parquet(path)
             )
-            self._pending.append(snap_fut)
-            # superseded rounds stay cached until the store is flushed —
-            # round edge-sets are small, and a checkpointed round's blocks
-            # must outlive every dependent job (its lineage is truncated, so
-            # evicted blocks are unrecoverable): only flush(), which first
-            # joins all background jobs, releases all but the latest per
-            # name.
-            self._cached.setdefault(name, []).append(out)
-
-        snap_dep = snap_fut if not blocking else None
+        out = df.localCheckpoint(eager=True)
+        if obs is not None:
+            got = obs.get
+            stats = (int(got["n"]), int(got["h"]))
+        snap_fut = self._metrics_pool.submit(
+            lambda: out.write.mode("overwrite")
+            .option("compression", SNAPSHOT_CODEC)
+            .parquet(path)
+        )
+        self._pending.append(snap_fut)
+        # superseded rounds stay cached until the store is flushed — round
+        # edge-sets are small, and a checkpointed round's blocks must
+        # outlive every dependent job (its lineage is truncated, so evicted
+        # blocks are unrecoverable): only flush(), which first joins all
+        # background jobs, releases all but the latest per name.
+        self._cached.setdefault(name, []).append(out)
 
         def _metrics_job() -> list:
             # Per-partition lineage/metrics come from the snapshot's OWN
@@ -176,8 +151,7 @@ class CheckpointStore:
             # cluster work riding the metrics pool. The metrics table
             # itself is written driver-side too (pyarrow), so bookkeeping
             # costs zero Spark jobs.
-            if snap_dep is not None:
-                snap_dep.result()  # submitted before us on the FIFO pool
+            snap_fut.result()  # submitted before us on the FIFO pool
             import glob
 
             import pyarrow as pa
@@ -222,8 +196,8 @@ class CheckpointStore:
         """Row count of a committed round from its parquet footers —
         driver-side metadata reads, zero Spark jobs. Only valid for rounds
         whose ``_SUCCESS`` marker exists (i.e. anything ``latest_round``
-        returns): non-blocking snapshots are joined by flush() before the
-        marker lands."""
+        returns): the marker lands only once the background snapshot write
+        has completed."""
         import glob
 
         import pyarrow.parquet as pq

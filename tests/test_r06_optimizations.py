@@ -204,24 +204,49 @@ def test_closure_byte_budget_takes_distributed_loop(spark, monkeypatch):
 
 
 # ---------------------------------------------------------------------------
-# cslr pair scoring: per-block enumeration vs distributed-join route
+# cslr-family pair scoring on the bucket grid vs the DuckDB oracles
 # ---------------------------------------------------------------------------
 
 
-def test_cslr_block_routes_agree(spark, monkeypatch):
-    """The size-routed pair scorer must produce the identical pair table
-    whichever side of CSLR_BLOCK_ENUM_CAP a block lands on."""
+def test_cslr_family_matches_oracle_on_grid(spark, monkeypatch):
+    """cslr_role_pairs, cslr_v1_pairs and jaccard_type_pairs enumerate
+    their pairs on blocking's bucket grid. Each must give the oracle's
+    pair set and values, both at the default grid (one bucket per block
+    at sf0.01) and with 4-row buckets, where most pairs meet in
+    off-diagonal cells. A cell's rows arrive in no particular id order."""
+    import duckdb
+
     import namedis_spark.queries as Q
+    from namedis_spark.operators import blocking
+    from scripts.check_entry import SF_DIR as sf  # the oracle gate's sf0.01
 
-    sf = "/root/testdata/sf0.001"
-    from namedis_spark.functions.core import cslr_v2_log
+    names = ("cslr_role_pairs", "cslr_v1_pairs", "jaccard_type_pairs")
+    con = duckdb.connect()
+    for t in Q.SPARK_TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
 
-    small = _sorted(Q._cslr_scored_pairs(spark, sf, cslr_v2_log).collect())
-    monkeypatch.setattr(Q, "CSLR_BLOCK_ENUM_CAP", 0)  # force the join route
-    big = _sorted(Q._cslr_scored_pairs(spark, sf, cslr_v2_log).collect())
-    assert small == big
-    assert len(small) > 0
+    def keyed(pdf, col):
+        return {
+            (r.block_key, r.conv_id1, r.conv_id2): getattr(r, col)
+            for r in pdf.itertuples(index=False)
+        }
 
+    want = {}
+    for name in names:
+        pdf = con.sql(Q.oracles()[name]).df()
+        want[name] = keyed(pdf, pdf.columns[-1])
+        assert len(want[name]) == 2279, (name, sf)  # within-block pairs at sf0.01
+    per_block: dict = {}
+    for bk, _, _ in want["cslr_role_pairs"]:
+        per_block[bk] = per_block.get(bk, 0) + 1
+    assert max(per_block.values()) > 4 * 3 // 2  # a block of 5+ spans 4-row buckets
 
-def _sorted(rows):
-    return sorted(tuple(r) for r in rows)
+    for rows in (blocking.BUCKET_ROWS, 4):
+        monkeypatch.setattr(blocking, "BUCKET_ROWS", rows)
+        for name in names:
+            pdf = Q.REGISTRY[name].spark_fn(spark, sf).toPandas()
+            got = keyed(pdf, pdf.columns[-1])
+            assert len(got) == len(pdf), (name, rows)  # no pair twice
+            assert set(got) == set(want[name]), (name, rows)
+            for k, v in want[name].items():
+                assert got[k] == pytest.approx(v, abs=1e-6), (name, rows, k)

@@ -18,7 +18,7 @@ import pyspark.sql.types as T
 import pytest
 
 from namedis_spark.datagen import generate_transcripts
-from namedis_spark.operators import corpus
+from namedis_spark.operators import blocking, corpus
 from namedis_spark.operators.blocking import PAIR_KEY_COLS, evidence_pairs
 from namedis_spark.operators.features import conversation_features
 from namedis_spark.operators.scoring import (
@@ -99,14 +99,11 @@ def scored(spark):
     pairs = small_pairs.unionByName(big_pairs.select(*PAIR_KEY_COLS)).persist()
 
     oracle = _by_key(oracle_scores(spark, pairs, f, side, params))
-    grouped = _by_key(
-        score_pairs_grouped(spark, pairs, prep, side, params,
-                            target_pairs_per_group=200)  # force salting
-    )
-    exhaustive = _by_key(
-        score_blocks_exhaustive(spark, prep, side, params,
-                                bucket_rows=BUCKET_ROWS, sizes=sizes)
-    )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(blocking, "TARGET_PAIRS_PER_CELL", 200)  # force salting
+        mp.setattr(blocking, "BUCKET_ROWS", BUCKET_ROWS)
+        grouped = _by_key(score_pairs_grouped(spark, pairs, prep, side, params))
+        exhaustive = _by_key(score_blocks_exhaustive(spark, prep, side, sizes, params))
     size_of = {r["block_key"]: r["n"] for r in sizes.collect()}
     return SimpleNamespace(
         oracle=oracle,
